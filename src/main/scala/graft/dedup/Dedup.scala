@@ -284,6 +284,12 @@ object Dedup {
       (a, x) => a.bitwiseOR(x))
   }
 
+  /** Largest `maxDf` [[ngramJaccard]] accepts: the guarded form expands
+    * each cold posting list into its doc pairs INSIDE one row, up to
+    * maxDf·(maxDf−1)/2 structs — 499,500 at this bound, 10× the default
+    * guard. */
+  val MaxInRowDf = 1000L
+
   /** n-gram Jaccard near-dup pairs via an inverted shingle index: explode
     * distinct shingles → document-frequency guard → self-join on shingle →
     * per-pair shared counts → exact Jaccard.
@@ -296,7 +302,8 @@ object Dedup {
     * corrected by the hot-array intersection, so every emitted J value is
     * exact. The guard affects candidate recall only — a pair is missed iff
     * EVERY shared shingle exceeds maxDf, i.e. the pair is pure boilerplate.
-    * `maxDf <= 0` disables the guard. */
+    * `maxDf <= 0` disables the guard; a guard above [[MaxInRowDf]] is
+    * rejected. */
   def ngramJaccard(
       docs: DataFrame,
       idCol: String,
@@ -305,6 +312,11 @@ object Dedup {
       tau: Double = 0.5,
       maxDf: Long = 100L,
       stage: Stage = localStage): DataFrame = {
+    require(
+      maxDf <= MaxInRowDf,
+      s"maxDf $maxDf exceeds $MaxInRowDf: each cold posting list expands to " +
+        "maxDf*(maxDf-1)/2 doc pairs inside one row; pass maxDf <= 0 for the " +
+        "unguarded join form instead")
     // Materialize the shingle relation and the inverted index once (via the
     // stage hook — localStage default, parquetStage at cluster scale): they
     // feed the df-guard aggregation, both sides of the candidate self-join,

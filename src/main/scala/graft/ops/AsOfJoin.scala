@@ -63,20 +63,17 @@ object AsOfJoin {
     * build rows of the union), and the probe side feeds two more (the
     * probe-bucket timeline and the probe rows). Catalyst cannot share them
     * (pruning narrows the timeline branches, so ReuseExchange never
-    * fires); with `stage = identity` everything below each branch
-    * re-executes. That is the right default when both inputs are parquet
-    * scans — the narrow branches re-scan only their pruned columns — but
-    * when a side embeds expensive derivation, pass `stage` (lazy
-    * `_.localCheckpoint(false)` single-node, parquet write-then-read at
-    * cluster scale) to materialize the deduped build once. */
+    * fires), so everything below each branch executes once per branch.
+    * When both inputs are parquet scans the narrow branches re-scan only
+    * their pruned columns; a caller whose side embeds expensive derivation
+    * materializes that side itself before calling. */
   private def prepUnion(
       probes: DataFrame,
       build: DataFrame,
       entityCol: String,
       tsCol: String,
       payload: Seq[String],
-      bucketWidth: Long,
-      stage: DataFrame => DataFrame): (DataFrame, StructType, StructType) = {
+      bucketWidth: Long): (DataFrame, StructType, StructType) = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val clash = probes.columns.toSet.intersect(payload.toSet)
     require(clash.isEmpty, s"payload columns collide with probe columns: $clash — rename one side")
@@ -86,11 +83,10 @@ object AsOfJoin {
     // One build row per (entity, ts): deterministic max over the payload
     // struct. Duplicate build timestamps would otherwise make window `last`
     // order-dependent (nondeterministic across runs).
-    val b0 = stage(
-      build
-        .groupBy(e, col(tsCol))
-        .agg(max(struct(payload.map(col): _*)).as(PAY))
-        .withColumn(B, floor(col(tsCol) / bucketWidth)))
+    val b0 = build
+      .groupBy(e, col(tsCol))
+      .agg(max(struct(payload.map(col): _*)).as(PAY))
+      .withColumn(B, floor(col(tsCol) / bucketWidth))
 
     val payType = b0.schema(PAY).dataType
     val probeType = StructType(probes.schema.fields)
@@ -143,9 +139,8 @@ object AsOfJoin {
       entityCol: String,
       tsCol: String,
       payload: Seq[String],
-      bucketWidth: Long,
-      stage: DataFrame => DataFrame = identity): DataFrame = {
-    val (unioned, _, _) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth, stage)
+      bucketWidth: Long): DataFrame = {
+    val (unioned, _, _) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth)
     val w = Window
       .partitionBy(col(entityCol), col(B))
       .orderBy(col(tsCol).asc, col(TAG).asc)
@@ -186,45 +181,31 @@ object AsOfJoin {
       .drop("__fresh")
   }
 
-  /** Explicit sort-merge as-of join: repartitionByRange on (entity, bucket) +
-    * secondary sort on (ts, tag) + single-pass streaming merge. Output rows
-    * stay (entity, bucket, ts)-sorted within partitions. */
-  /** @param stageUnion materialization hook for the unioned merge input —
-    *   the RangePartitioner's sampling pass otherwise executes the whole
-    *   prep subtree twice (see below). The default lazy local checkpoint
-    *   pins the relation's blocks for the SESSION lifetime (the returned
-    *   DataFrame's lineage is truncated onto them, so the operator cannot
-    *   release them itself); the bench loop's between-query hygiene
-    *   reclaims them, and a long-lived caller invoking asOfMerge many
-    *   times should pass `identity` (re-pays the sampling double-compute)
-    *   or its own TTL'd parquet stage. */
+  /** Explicit sort-merge as-of join: repartitionByRange on (entity, bucket)
+    * into `spark.sql.shuffle.partitions` partitions + secondary sort on
+    * (ts, tag) + single-pass streaming merge. Output rows stay
+    * (entity, bucket, ts)-sorted within partitions.
+    *
+    * The RangePartitioner SAMPLES its input to place the split bounds, so
+    * the prep subtree (build dedupe, carry window, union) executes twice:
+    * once for the sample job, once for the real shuffle. Nothing is staged
+    * or pinned to avoid that; the per-layer benchmark reports the cost as
+    * `asof_merge.scan_reads_per_row`. */
   def asOfMerge(
       probes: DataFrame,
       build: DataFrame,
       entityCol: String,
       tsCol: String,
       payload: Seq[String],
-      bucketWidth: Long,
-      numPartitions: Int = 0,
-      stage: DataFrame => DataFrame = identity,
-      stageUnion: DataFrame => DataFrame = _.localCheckpoint(false)): DataFrame = {
-    val (unioned, probeType, payType) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth, stage)
-    val spark = probes.sparkSession
-    val parts = if (numPartitions > 0) numPartitions else spark.sessionState.conf.numShufflePartitions
+      bucketWidth: Long): DataFrame = {
+    val (unioned, probeType, payType) = prepUnion(probes, build, entityCol, tsCol, payload, bucketWidth)
     // Range partitioning keeps every (entity, bucket) group in one partition
     // (equal keys compare equal → same range) while spreading a hot entity's
     // buckets across many partitions — the explicit skew treatment.
-    //
-    // The RangePartitioner SAMPLES its input to place the split bounds,
-    // which executes the input subtree twice: once for the sample job, once
-    // for the real shuffle (r8 measurement: the build-dedupe groupBy and the
-    // carry window both ran twice). stageUnion (default: lazy local
-    // checkpoint) materializes the union on its first (sampling) pass; the
-    // shuffle pass then re-reads the blocks — the same bytes the exchange
-    // moves anyway. Block lifecycle: see the scaladoc.
-    val sorted = stageUnion(
-      unioned.select(col(entityCol), col(B), col(tsCol), col(TAG), col(PAY), col(PRB)))
-      .repartitionByRange(parts, col(entityCol), col(B))
+    val sorted = unioned
+      .select(col(entityCol), col(B), col(tsCol), col(TAG), col(PAY), col(PRB))
+      .repartitionByRange(
+        probes.sparkSession.sessionState.conf.numShufflePartitions, col(entityCol), col(B))
       .sortWithinPartitions(col(entityCol), col(B), col(tsCol), col(TAG))
 
     // SrcTs carries the matched build row's ts — same type as the ts column

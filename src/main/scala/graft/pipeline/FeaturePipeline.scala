@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.codec.ImageCodec
@@ -50,22 +49,6 @@ object FeaturePipeline {
       // P9 string rewrite: `imagebind_feature_extractor.py:62`
       .withColumn("caption_rw", regexp_replace(col("caption"), "#C C", "actor"))
       .drop("bytes")
-    // A/B hook (perf comparisons only — NOT a supported mode): the plain
-    // entity-window formulation this bucketed stage replaced.
-    if (sys.props.get("graft.pipeline.plainWindows").contains("1")) {
-      val w = Window.partitionBy(col("entity")).orderBy(col("ts"))
-      return graft.ops.Sessionize.sessionize(
-        graft.ops.Backfill.locf(withVec, "entity", "ts", Seq("caption_rw"))
-          .withColumnRenamed("caption_rw_filled", "caption_filled")
-          .withColumn(
-            "vec_delta",
-            VecOps.vecSub(
-              col("vec").cast("array<double>"),
-              coalesce(
-                lag(col("vec"), 1).over(w).cast("array<double>"),
-                col("vec").cast("array<double>")))),
-        "entity", "ts", SessionGapFrames).drop("caption_rw")
-    }
     BucketedWindows
       .frameWindows(
         withVec,

@@ -37,6 +37,23 @@ class DedupSpec extends SparkSpec {
     assert(!out.keySet.exists(p => p._1 == 5L || p._2 == 5L))
   }
 
+  test("ngram jaccard rejects maxDf above MaxInRowDf; maxDf <= 0 keeps the join form") {
+    val err = intercept[IllegalArgumentException](
+      Dedup.ngramJaccard(docs, "doc_id", "text", maxDf = Dedup.MaxInRowDf + 1))
+    assert(err.getMessage.contains(s"exceeds ${Dedup.MaxInRowDf}"))
+    def plan(maxDf: Long) =
+      Dedup.ngramJaccard(docs, "doc_id", "text", maxDf = maxDf, stage = identity)
+        .queryExecution.optimizedPlan.toString
+    // the guarded form collects posting lists; at the bound it is accepted
+    assert(plan(Dedup.MaxInRowDf).contains("collect_list"))
+    Seq(0L, -1L).foreach { off =>
+      assert(!plan(off).contains("collect_list"), s"maxDf $off must not collect posting lists")
+      val out = Dedup.ngramJaccard(docs, "doc_id", "text", tau = 0.5, maxDf = off)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      assert(out((1L, 4L)) == 1.0)
+    }
+  }
+
   test("simhash: identical texts equal, near-dups closer than unrelated") {
     def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
     val h = docs.select($"doc_id", Dedup.simhash($"text").as("s"))

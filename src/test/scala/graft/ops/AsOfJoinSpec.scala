@@ -117,16 +117,4 @@ class AsOfJoinSpec extends SparkSpec {
       .orderBy("entity", "ts", "probe_id").collect().toSeq
     assert(a == b)
   }
-
-  test("staging the deduped build (diamond materialization) does not change semantics") {
-    val build = buildRows.toDF("entity", "ts", "v")
-    val probes = probeRows.zipWithIndex.map { case ((e, t), i) => (e, t, i) }
-      .toDF("entity", "ts", "probe_id")
-    val a = AsOfJoin.asOf(probes, build, "entity", "ts", Seq("v"), 7L)
-      .orderBy("entity", "ts", "probe_id").collect().toSeq
-    val staged = AsOfJoin
-      .asOf(probes, build, "entity", "ts", Seq("v"), 7L, stage = _.localCheckpoint(false))
-      .orderBy("entity", "ts", "probe_id").collect().toSeq
-    assert(a == staged)
-  }
 }
